@@ -16,28 +16,12 @@ object Audits {
     * before cleaning). Keeps street ways with exactly one official match
     * where something still disagrees: a version not found, or fewer than 4
     * versions present. Output: the 4 name versions + the matched official
-    * pair. */
+    * pair ([[StreetNameFix.audit]]; OsmPipeline.streetAudit runs the same
+    * probe over its staged scan). */
   def bilingualStreetNames(spark: SparkSession, osmPath: String,
       officialPath: String): DataFrame =
-    bilingualStreetNames(
-      OsmIngest.tags(OsmIngest.rawWays(spark, osmPath)),
-      OfficialList.lookup(OfficialList.cleaned(spark, officialPath)))
-
-  /** Same audit over prepared inputs — lets callers share a cached scan
-    * (OsmPipeline.streetAudit) instead of re-parsing the XML. */
-  def bilingualStreetNames(tags: DataFrame, lookup: DataFrame): DataFrame = {
-    val streets = StreetNameFix.streetIds(tags)
-    // versions is probed AND re-joined below — staged (see Stage.barrier)
-    val versions = graft.ops.Stage.barrier(
-      StreetNameFix.nameVersions(tags, streets))
-    val results = StreetNameFix.lookupResults(versions, lookup)
-    versions.join(results, Seq("id"))
-      .filter(col("n_matches") === 1 &&
-        (col("not_found") > 0 || col("n_versions") < 4))
-      .select(col("id"), col("en_only"), col("reg_eng"), col("zh_only"),
-        col("reg_chi"), col("c_eng").as("official_eng"),
-        col("c_chi").as("official_chi"))
-  }
+    StreetNameFix.audit(OsmIngest.rawWays(spark, osmPath),
+      OfficialList.byName(OfficialList.cleaned(spark, officialPath)))
 
   /** The audit's three tolerant phone-shape regexes
     * (audit_phone_numbers.py:30-55). Dialect-safe in Java regex; the

@@ -93,11 +93,16 @@ object OfficialList {
   def load(spark: SparkSession, path: String): DataFrame =
     corrected(cleaned(spark, path))
 
-  /** The name→entry probe table (create_lookups equivalent): one row per
-    * (name, eng, chi) where name is either language's form. Broadcast this
-    * for lookups — it replaces the reference's in-memory dicts. */
-  def lookup(official: DataFrame): DataFrame =
-    official.select(col("eng").as("name"), col("eng"), col("chi"))
-      .union(official.select(col("chi").as("name"), col("eng"), col("chi")))
-      .distinct()
+  /** The name → entries probe table (create_lookups equivalent): one row
+    * per name either language uses, with every distinct official
+    * (eng, chi) entry carrying it — more than one only where a name
+    * collides across entries. Broadcast for probes; it replaces the
+    * reference's in-memory dicts. The list is a few thousand rows, so one
+    * task groups it (coalesce(1)) and the probe needs no shuffle. */
+  def byName(official: DataFrame): DataFrame =
+    official.coalesce(1)
+      .select(explode(array(col("eng"), col("chi"))).as("name"),
+        struct(col("eng"), col("chi")).as("entry"))
+      .groupBy(col("name"))
+      .agg(collect_set(col("entry")).as("entries"))
 }

@@ -146,20 +146,28 @@ object OsmIngest {
     * parse_clean_and_csv.py:135-141): `name:zh:pinyin` → type `name`,
     * key `zh:pinyin`; no colon → type `regular`. */
   def tags(raw: DataFrame): DataFrame =
-    raw.select(col("_id").as("id"),
+    shape(raw.select(col("_id").as("id"),
         posexplode(col("tag")).as(Seq("tag_pos", "t")))
       .select(col("id"), col("tag_pos"),
-        col("t._k").as("k"), col("t._v").as("value"))
-      .filter(!col("k").rlike(ProblemChars))
-      .withColumn("has_colon", col("k").contains(":"))
-      .select(
+        col("t._k").as("k"), col("t._v").as("value")))
+
+  /** The shaping half of [[tags]] over flat (id, tag_pos, k, value) rows:
+    * drop problem-char keys, split the rest at the first colon. Extra
+    * columns ride along after (id, key, value, type, tag_pos). */
+  private[osm] def shape(flat: DataFrame): DataFrame = {
+    val hasColon = col("k").contains(":")
+    val extras = flat.columns.toSeq
+      .filterNot(Set("id", "tag_pos", "k", "value")).map(col)
+    flat.filter(!col("k").rlike(ProblemChars))
+      .select((Seq(
         col("id"),
-        when(col("has_colon"), regexp_extract(col("k"), "^(.*?):(.*)$", 2))
+        when(hasColon, regexp_extract(col("k"), "^(.*?):(.*)$", 2))
           .otherwise(col("k")).as("key"),
         col("value"),
-        when(col("has_colon"), regexp_extract(col("k"), "^(.*?):(.*)$", 1))
+        when(hasColon, regexp_extract(col("k"), "^(.*?):(.*)$", 1))
           .otherwise("regular").as("type"),
-        col("tag_pos"))
+        col("tag_pos")) ++ extras): _*)
+  }
 
   /** ways_nodes(id, node_id, position) — position is the 0-based ordinal of
     * the `<nd>` ref within its way (parse_clean_and_csv.py:143-149), via

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * ways), fix street names (ways only), derive update_history, expose the
   * six output relations.
   *
-  * The shaped tag relations are cached: they feed multiple sinks (tags CSV,
-  * update-history aggregation, name-version pivot), mirroring the
-  * reference's single pass computing all outputs together.
+  * The raw XML reads and the fixed tag relations are staged: they feed
+  * several sinks (CSVs, update-history aggregation, audits, explore),
+  * mirroring the reference's single pass computing all outputs together.
   */
 final case class OsmPipeline(spark: SparkSession, osmPath: String,
     officialPath: String, quarantineDir: Option[String] = None) {
@@ -54,7 +54,6 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   def officialUncorrected: DataFrame = officialUncorrectedM()
 
   def official: DataFrame = OfficialList.corrected(officialUncorrected)
-  def lookup: DataFrame = OfficialList.lookup(official)
 
   // The raw XML reads are the caches that matter: a single OSM file parses
   // on one task, and every shaped relation (nodes, ways, tags ×2, way
@@ -70,10 +69,19 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   // on every one of the pipeline's jobs (measured via OsmProfile). A
   // well-sharded input keeps its layout (no gratuitous shuffle).
   private val SpreadBytesPerPartition = 1L << 20
+  //
+  // The input may be a file, a glob or a directory of shards: sum the
+  // lengths of the files under every match (a directory's own status
+  // length is a block-size placeholder, not its contents).
   private lazy val inputBytes: Long = {
     val hPath = new org.apache.hadoop.fs.Path(osmPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(hPath)).map(_.map(_.getLen).sum).getOrElse(0L)
+    Option(fs.globStatus(hPath)).toSeq.flatten.map { st =>
+      val files = fs.listFiles(st.getPath, true)
+      var n = 0L
+      while (files.hasNext) n += files.next().getLen
+      n
+    }.sum
   }
   private def spread(df: DataFrame): DataFrame = {
     val byBytes = (inputBytes + SpreadBytesPerPartition - 1) /
@@ -111,15 +119,16 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   private def rawWays = rawWaysM()
 
   // nodes/ways appear in several branches of one exploration job
-  // (counts + distinct_users + contribution joins) — barrier, not cache
-  private val nodesM = memo(graft.ops.Stage.barrier(OsmIngest.nodes(rawNodes)))
-  def nodes: DataFrame = nodesM()
-  private val waysM = memo(graft.ops.Stage.barrier(OsmIngest.ways(rawWays)))
-  def ways: DataFrame = waysM()
+  // (counts + distinct_users + contribution joins); they are projections
+  // of the staged raw reads, so every branch reads that cache — no
+  // staging of their own
+  def nodes: DataFrame = OsmIngest.nodes(rawNodes)
+  def ways: DataFrame = OsmIngest.ways(rawWays)
   def wayNodes: DataFrame = OsmIngest.wayNodes(rawWays)
 
-  /** Shaped tags BEFORE any cleaning — the audit scripts' input (they run
-    * against the uncleaned data by design, SURVEY.md §3.2-3.3). Cheap
+  /** Shaped tags BEFORE any cleaning — the phone audit's input (the audit
+    * scripts run against the uncleaned data by design, SURVEY.md
+    * §3.2-3.3; the street audit reads the raw way rows directly). Cheap
     * projections of the cached raw reads. */
   def rawNodeTags: DataFrame = OsmIngest.tags(rawNodes)
   def rawWayTags: DataFrame = OsmIngest.tags(rawWays)
@@ -129,22 +138,14 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     graft.ops.Stage.barrier(PhoneFix.fixPhonesInTags(rawNodeTags)))
   def nodeTagsFixed: DataFrame = nodeTagsFixedM()
 
-  /** way tags after phone fix THEN street-name fix (process_map order,
-    * parse_clean_and_csv.py:260,272-273). phoneFixed is staged: it feeds
-    * the fix plan AND the apply step of the same job (see Stage.barrier). */
-  private val wayTagsFixedM = memo {
-    val phoneFixed =
-      graft.ops.Stage.barrier(PhoneFix.fixPhonesInTags(rawWayTags))
-    val streets = StreetNameFix.streetIds(phoneFixed)
-    // versions feeds the lookup probe AND the plan join; plan feeds the
-    // overwrite AND the append branch — both tiny (one row per street
-    // way), both double-computed without a stage (no subplan CSE)
-    val versions = graft.ops.Stage.barrier(
-      StreetNameFix.nameVersions(phoneFixed, streets))
-    val plan = graft.ops.Stage.barrier(
-      StreetNameFix.fixPlan(versions, lookup))
-    graft.ops.Stage.barrier(StreetNameFix.applyFix(phoneFixed, plan))
-  }
+  /** way tags after the street-name and phone fixes (with tag_pos,
+    * name_changed + phone_changed). The street-name fix runs per way row
+    * over the staged raw read and probes the broadcast official list — a
+    * shuffle-free plan, staged once because the CSV sink and the
+    * update-history flags both read it. */
+  private[osm] def wayTagsFixedPlan: DataFrame =
+    StreetNameFix.fix(rawWays, OfficialList.byName(official))
+  private val wayTagsFixedM = memo(graft.ops.Stage.barrier(wayTagsFixedPlan))
   def wayTagsFixed: DataFrame = wayTagsFixedM()
 
   /** Output projections (drop the internal tag_pos / flag columns). */
@@ -186,10 +187,10 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   def phoneAuditRows: DataFrame =
     phoneAudit.select(col("id"), col("key"), col("value"), col("type"))
 
-  /** X5 — the bilingual street-name audit (uncorrected official list). */
+  /** X5 — the bilingual street-name audit (uncorrected official list):
+    * the fix's per-row probe over the staged raw read, unstaged. */
   def streetAudit: DataFrame =
-    Audits.bilingualStreetNames(rawWayTags,
-      OfficialList.lookup(officialUncorrected))
+    StreetNameFix.audit(rawWays, OfficialList.byName(officialUncorrected))
 
   /** Register the reference's five SQL tables + update_history as temp
     * views with typed id columns for exploration (SURVEY.md §3.4). */

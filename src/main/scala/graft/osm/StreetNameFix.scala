@@ -6,12 +6,17 @@ import org.apache.spark.sql.functions._
 /** Bilingual street-name audit + fix (F2, X1, J1/J2, X2 in SURVEY.md §2;
   * ref: parse_clean_and_csv.py:380-485).
   *
-  * Shape: way-level name versions are a manual pivot (one groupBy over the
-  * street ways' tags), the official-list probe is a broadcast hash join, and
-  * the fix is a per-tag projection after joining way-level canonical names
-  * back — two shuffles total (the groupBy on id and the fix-back join on id),
-  * both on the same key so AQE can coalesce; the official list never
-  * shuffles.
+  * Shape: one narrow pass per way ROW, like the reference's per-element
+  * loop. Each raw way row (`_id` + its `tag` array) builds its four name
+  * versions, presence flags and append position with higher-order array
+  * functions; the versions probe the broadcast name → entries table
+  * ([[OfficialList.byName]]) through four broadcast left joins; the fixed
+  * tag array is exploded once and shaped like the ingest tags. Nothing is
+  * keyed on the way id, so the way side never shuffles and nothing needs
+  * staging mid-plan.
+  *
+  * Two `<way>` elements sharing an id are fixed (and audited)
+  * independently, as the reference's per-element loop does.
   */
 object StreetNameFix {
 
@@ -26,138 +31,152 @@ object StreetNameFix {
   val EngNameRe = "[ ]*([A-Za-z0-9'\\-,. ]{4,})"
   val ChiNameRe = "([^A-Za-z'\\-,. ]+[0-9]?[^A-Za-z'\\-,. ]+)"
 
-  /** F2 — ids of ways that are streets: ∃ tag key='highway' with a street
-    * value (is_street, parse_clean_and_csv.py:380-388). */
-  def streetIds(tags: DataFrame): DataFrame =
-    tags.filter(col("key") === "highway" && col("value").isin(StreetValues: _*))
-      .select(col("id")).distinct()
+  // The raw keys of the three name-tag kinds. Under the ingest's
+  // first-colon split, (type, key) = (name, en) holds exactly for
+  // `name:en`, (name, zh) for `name:zh` and (regular, name) for `name`;
+  // none of them has a problem char.
+  private val EnKey = "name:en"
+  private val ZhKey = "name:zh"
+  private val RegKey = "name"
 
-  /** Last-writer-wins pick of a conditional value: max over
-    * (tag_pos, value) structs — rows failing `cond` contribute NULL and are
-    * ignored by max. Mirrors the reference's dict-overwrite semantics when a
-    * way carries duplicate name tags (get_street_names assigns per tag in
-    * list order, parse_clean_and_csv.py:397-408). */
-  private def lastBy(cond: Column, value: Column): Column =
-    max(when(cond, struct(col("tag_pos"), value.as("v")))).getField("v")
+  private def k(t: Column): Column = t.getField("_k")
+  private def v(t: Column): Column = t.getField("_v")
 
-  /** X1 — pivot each street way's tags into up-to-4 name versions:
-    * en_only (name:en), zh_only (name:zh), reg_eng / reg_chi (regex split of
-    * the plain `name` tag). An empty regex match means "version absent"
-    * (Python re.search None → our nullif(…, '')). Also emits presence flags
-    * and the way's max tag_pos for append ordering.
-    * Returns one row per street way. */
-  def nameVersions(tags: DataFrame, streets: DataFrame): DataFrame = {
-    val isEn = col("type") === "name" && col("key") === "en"
-    val isZh = col("type") === "name" && col("key") === "zh"
-    val isReg = col("type") === "regular" && col("key") === "name"
-    val regEng = nullif(regexp_extract(col("value"), EngNameRe, 1), lit(""))
-    val regChi = nullif(regexp_extract(col("value"), ChiNameRe, 1), lit(""))
-    tags.join(streets, Seq("id"), "left_semi")
-      .groupBy(col("id"))
-      .agg(
-        lastBy(isEn, col("value")).as("en_only"),
-        lastBy(isZh, col("value")).as("zh_only"),
-        lastBy(isReg && regEng.isNotNull, regEng).as("reg_eng"),
-        lastBy(isReg && regChi.isNotNull, regChi).as("reg_chi"),
-        max(when(isEn, 1).otherwise(0)).as("has_en"),
-        max(when(isZh, 1).otherwise(0)).as("has_zh"),
-        max(when(isReg, 1).otherwise(0)).as("has_reg"),
-        max(col("tag_pos")).as("max_pos"))
+  /** The shaped tag survives (no problem char in its key). */
+  private def keyOk(key: Column): Column = !key.rlike(OsmIngest.ProblemChars)
+
+  /** F2 — a street value under a shaped key `highway`: the raw key
+    * `highway`, or `<type>:highway` with a colon-free type and no problem
+    * char (is_street, parse_clean_and_csv.py:380-388). Cheapest test
+    * first: it runs on every tag of every way. */
+  private def isStreetTag(t: Column): Column =
+    v(t).isin(StreetValues: _*) && (k(t) === "highway" ||
+      (k(t).rlike("^[^:]*:highway$") && keyOk(k(t))))
+
+  /** Last-writer-wins pick: the last non-null element. Mirrors the
+    * reference's dict-overwrite semantics when a way carries duplicate
+    * name tags (get_street_names assigns per tag in list order,
+    * parse_clean_and_csv.py:397-408). `try_` because ANSI mode makes
+    * `element_at` on an empty array an error. */
+  private def lastOf(values: Column): Column =
+    try_element_at(values, lit(-1))
+
+  private def nameExtract(re: String)(s: Column): Column =
+    nullif(regexp_extract(s, re, 1), lit(""))
+
+  private val Versions = Seq("en_only", "zh_only", "reg_eng", "reg_chi")
+
+  /** X1 — per way row: `is_street`, up-to-4 name versions en_only
+    * (name:en), zh_only (name:zh), reg_eng / reg_chi (regex split of the
+    * plain `name` tag), presence flags `has_en` / `has_zh` / `has_reg`,
+    * `n_versions`, and `max_pos` — the last position among the tags whose
+    * keys survive shaping, after which missing names are appended. An
+    * empty regex match means "version absent" (Python re.search None →
+    * nullif(…, '')); a name tag with a null value still wins as last
+    * writer. Versions and `max_pos` are NULL on non-street ways.
+    * Input: raw way rows (`_id`, `tag`); `id` replaces `_id`. */
+  def versions(rawWays: DataFrame): DataFrame = {
+    val tags = col("tag")
+    def has(key: String) =
+      coalesce(exists(tags, t => k(t) === key), lit(false))
+    val regs = transform(filter(tags, t => k(t) === RegKey), v(_))
+    val isStreet = coalesce(exists(tags, isStreetTag), lit(false))
+    def street(c: Column) = when(col("is_street"), c)
+    rawWays
+      .select(col("_id").as("id"), tags, isStreet.as("is_street"))
+      .select(col("id"), col("tag"), col("is_street"),
+        street(lastOf(filter(tags, t => k(t) === EnKey)).getField("_v"))
+          .as("en_only"),
+        street(lastOf(filter(tags, t => k(t) === ZhKey)).getField("_v"))
+          .as("zh_only"),
+        street(lastOf(filter(transform(regs, nameExtract(EngNameRe)(_)),
+          _.isNotNull))).as("reg_eng"),
+        street(lastOf(filter(transform(regs, nameExtract(ChiNameRe)(_)),
+          _.isNotNull))).as("reg_chi"),
+        has(EnKey).as("has_en"), has(ZhKey).as("has_zh"),
+        has(RegKey).as("has_reg"),
+        street(array_max(transform(tags,
+          (t, i) => when(keyOk(k(t)), i)))).as("max_pos"))
       .withColumn("n_versions",
-        col("en_only").isNotNull.cast("int")
-          + col("zh_only").isNotNull.cast("int")
-          + col("reg_eng").isNotNull.cast("int")
-          + col("reg_chi").isNotNull.cast("int"))
+        Versions.map(c => col(c).isNotNull.cast("int")).reduce(_ + _))
   }
 
-  /** J1 — probe every present name version against the broadcast official
-    * lookup; per way: number of DISTINCT official entries matched, number of
-    * versions not found, and the (single) matched canonical pair
-    * (name_look_up, parse_clean_and_csv.py:411-424 — the entry identity is
-    * the (eng, chi) pair, replacing the reference's positional index). */
-  def lookupResults(versions: DataFrame, lookup: DataFrame): DataFrame = {
-    val probes = versions.select(col("id"),
-        explode(array(col("en_only"), col("zh_only"), col("reg_eng"),
-          col("reg_chi"))).as("name"))
-      .filter(col("name").isNotNull)
-    probes.join(broadcast(lookup), Seq("name"), "left")
-      .groupBy(col("id"))
-      .agg(
-        // struct(null,null) is itself non-null — wrap in when() so unmatched
-        // probes contribute NULL and are excluded from the distinct count
-        countDistinct(when(col("eng").isNotNull,
-          struct(col("eng"), col("chi")))).as("n_matches"),
-        sum(when(col("eng").isNull, 1).otherwise(0)).as("not_found"),
-        max(struct(col("eng"), col("chi"))).as("match"))
-      .select(col("id"), col("n_matches"), col("not_found"),
-        col("match.eng").as("c_eng"), col("match.chi").as("c_chi"))
-  }
-
-  /** X2 — the fix plan per way: canonical names for ways with EXACTLY ONE
-    * distinct official match (fix_street_names, parse_clean_and_csv.py:
-    * 426-485). Returns (id, c_eng, c_chi, c_reg, has_en, has_zh, has_reg,
-    * max_pos). */
-  def fixPlan(versions: DataFrame, lookup: DataFrame): DataFrame =
-    lookupResults(versions, lookup)
-      .filter(col("n_matches") === 1)
-      .join(versions.select(col("id"), col("has_en"), col("has_zh"),
-        col("has_reg"), col("max_pos")), Seq("id"))
-      .withColumn("c_reg", concat(col("c_chi"), lit(" "), col("c_eng")))
-
-  /** Apply the fix: overwrite the three name-tag kinds with canonical
-    * values on fixable ways; append any of the three that are missing (at
-    * the end of the way's tag list, order en → zh → reg, matching the
-    * reference's append order at parse_clean_and_csv.py:469-484).
-    * Input/out: shaped tags (id, key, value, type, tag_pos) +
-    * `name_changed` on every row. */
-  def applyFix(tags: DataFrame, plan: DataFrame): DataFrame = {
-    val p = plan.select(col("id"), col("c_eng"), col("c_chi"), col("c_reg"),
-      col("has_en"), col("has_zh"), col("has_reg"), col("max_pos"))
-    val isEn = col("type") === "name" && col("key") === "en"
-    val isZh = col("type") === "name" && col("key") === "zh"
-    val isReg = col("type") === "regular" && col("key") === "name"
-    val fixable = col("c_eng").isNotNull
-
-    // pass through any extra columns the caller carries (e.g. the phone
-    // fixer's per-tag phone_changed flag)
-    val extras = tags.columns.toSeq
-      .filterNot(Set("id", "key", "value", "type", "tag_pos"))
-    val overwritten = tags.join(p, Seq("id"), "left")
-      .withColumn("new_value",
-        when(fixable && isEn, col("c_eng"))
-          .when(fixable && isZh, col("c_chi"))
-          .when(fixable && isReg, col("c_reg"))
-          .otherwise(col("value")))
-      .withColumn("name_changed", col("new_value") =!= col("value"))
-      .select((Seq(col("id"), col("key"), col("new_value").as("value"),
-        col("type"), col("tag_pos"), col("name_changed")) ++
-        extras.map(col)): _*)
-
-    val appended = p.select(col("id"), col("max_pos"),
-        explode(array(
-          when(col("has_en") === 0,
-            struct(lit("en").as("key"), col("c_eng").as("value"),
-              lit("name").as("type"), lit(0).as("ord"))),
-          when(col("has_zh") === 0,
-            struct(lit("zh").as("key"), col("c_chi").as("value"),
-              lit("name").as("type"), lit(1).as("ord"))),
-          when(col("has_reg") === 0,
-            struct(lit("name").as("key"), col("c_reg").as("value"),
-              lit("regular").as("type"), lit(2).as("ord"))))).as("t"))
-      .filter(col("t").isNotNull)
-      .select(col("id"), col("t.key").as("key"), col("t.value").as("value"),
-        col("t.type").as("type"),
-        (col("max_pos") + 1 + col("t.ord")).as("tag_pos"),
-        lit(true).as("name_changed"))
-
-    // appended tags never carry caller extras — fill with nulls/false
-    val appendedAligned = extras.foldLeft(appended) { (df, c) =>
-      df.withColumn(c,
-        if (c == "phone_changed") lit(false)
-        else lit(null).cast(tags.schema(c).dataType))
+  /** J1 — probe every present version against the broadcast name → entries
+    * table (name_look_up, parse_clean_and_csv.py:411-424; the entry
+    * identity is the (eng, chi) pair, replacing the reference's positional
+    * index). Adds `n_matches` (DISTINCT official entries matched by any
+    * version), `not_found` (present versions naming no entry) and `entry`,
+    * the matched (eng, chi) when `n_matches` is exactly 1. */
+  private def probed(rawWays: DataFrame, byName: DataFrame): DataFrame = {
+    val table = broadcast(byName)
+    val withHits = Versions.foldLeft(versions(rawWays)) { (df, ver) =>
+      df.join(table.select(col("name").as(s"${ver}_name"),
+          col("entries").as(s"${ver}_hits")),
+        col(ver) === col(s"${ver}_name"), "left")
+        .drop(s"${ver}_name")
     }
-    overwritten.unionByName(appendedAligned)
+    val noHits = array().cast(byName.schema("entries").dataType)
+    val matches = array_distinct(
+      concat(Versions.map(ver => coalesce(col(s"${ver}_hits"), noHits)): _*))
+    withHits
+      .withColumn("n_matches", size(matches))
+      .withColumn("not_found", Versions.map(ver =>
+        (col(ver).isNotNull && col(s"${ver}_hits").isNull).cast("int"))
+        .reduce(_ + _))
+      .withColumn("entry", when(col("n_matches") === 1,
+        try_element_at(matches, lit(1))))
+      .drop(Versions.map(ver => s"${ver}_hits"): _*)
   }
+
+  /** X2 — the fixed way tags (fix_street_names, parse_clean_and_csv.py:
+    * 426-485), then the phone fix. A street way whose versions match
+    * EXACTLY ONE official entry gets its three name-tag kinds overwritten
+    * with the canonical values, and any kind it lacks appended after its
+    * last tag in the order en → zh → reg (the reference's append order at
+    * parse_clean_and_csv.py:469-484). The phone fix touches disjoint keys,
+    * so applying it last equals the reference's phone-then-name order.
+    * Output: shaped tags (id, key, value, type, tag_pos) + `name_changed`
+    * + `phone_changed`. */
+  def fix(rawWays: DataFrame, byName: DataFrame): DataFrame = {
+    val fixable = col("n_matches") === 1
+    val cEng = col("entry.eng")
+    val cChi = col("entry.chi")
+    val cReg = concat(cChi, lit(" "), cEng)
+    val kept = transform(col("tag"), (t, i) => {
+      val value = when(fixable && k(t) === EnKey, cEng)
+        .when(fixable && k(t) === ZhKey, cChi)
+        .when(fixable && k(t) === RegKey, cReg)
+        .otherwise(v(t))
+      struct(i.as("tag_pos"), k(t).as("k"), value.as("value"),
+        (value =!= v(t)).as("name_changed"))
+    })
+    def append(has: String, key: String, value: Column, ord: Int) =
+      when(fixable && !col(has),
+        struct((col("max_pos") + 1 + ord).as("tag_pos"), lit(key).as("k"),
+          value.as("value"), lit(true).as("name_changed")))
+    val appended = filter(array(
+      append("has_en", EnKey, cEng, 0),
+      append("has_zh", ZhKey, cChi, 1),
+      append("has_reg", RegKey, cReg, 2)), _.isNotNull)
+    val flat = probed(rawWays, byName)
+      .select(col("id"), explode(concat(kept, appended)).as("t"))
+      .select(col("id"), col("t.tag_pos"), col("t.k"), col("t.value"),
+        col("t.name_changed"))
+    PhoneFix.fixPhonesInTags(OsmIngest.shape(flat))
+  }
+
+  /** X5 — the bilingual street-name audit
+    * (audit_bilingual_street_names.py:230-278): street ways with exactly
+    * one official match where something still disagrees — a version not
+    * found, or fewer than 4 versions present. Output: the 4 name versions
+    * + the matched official pair. */
+  def audit(rawWays: DataFrame, byName: DataFrame): DataFrame =
+    probed(rawWays, byName)
+      .filter(col("n_matches") === 1 &&
+        (col("not_found") > 0 || col("n_versions") < 4))
+      .select(col("id"), col("en_only"), col("reg_eng"), col("zh_only"),
+        col("reg_chi"), col("entry.eng").as("official_eng"),
+        col("entry.chi").as("official_chi"))
 
   /** Per-way name-updated flag: any overwrite changed a value, or anything
     * was appended (ref `updated` flag, parse_clean_and_csv.py:431-485).
